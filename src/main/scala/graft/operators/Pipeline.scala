@@ -26,7 +26,15 @@ object Pipeline {
     * (r14, the TextAnalysis.docsSpread twin — see its comment for the
     * full 16-site A/B). Only q113's boilerplateTopK keeps it here: its
     * count_distinct(doc_id)-per-gram consumer cannot pre-reduce on the
-    * map side (measured 0.85× with the spread). The OTHER fiveGramsOf
+    * map side. Mechanism: hashpartitioning(doc_id) already satisfies the
+    * (ng, doc_id) distinct's clustering, so the spread REPLACES that
+    * gram-pair exchange instead of adding a third — the pre-split plan
+    * shows (ng, doc_id) + (ng) exchanges, the spread plan doc_id + (ng)
+    * (plans/r14/q113_*), and the explode runs on every core. Interleaved
+    * A/B at sf0.1, local[4] on a 4-core box (noop sink, 2 warm-ups, 8
+    * interleaved runs): plain 628 ms min / 741 median, spread 450 / 483
+    * (a re-run: plain 607 / 691, spread 354 / 456); top-20 rows
+    * identical. The OTHER fiveGramsOf
     * consumers (q105/q112/q192 semi-join decontamination) measured
     * 1.25–1.56× WORSE spread — their broadcast semi-joins compact
     * map-side, same lesson as spanDecon's r13 revert (note at its def);

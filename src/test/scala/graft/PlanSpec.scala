@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.GenerateExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the physical-plan properties the 100 TB design rests on. A plan
@@ -215,19 +218,59 @@ class PlanSpec extends AnyFunSuite {
 
   test("q113: df counting pays gram-keyed exchanges only; cut is a heap") {
     // cross-document frequency is inherently gram-keyed — the exchange is
-    // the point — but it must be the ONLY exchange shape: the partial
-    // (ng, doc_id) dedup pair plus the (ng) final, never a doc- or
-    // corpus-keyed shuffle, and the top-20 cut must be TakeOrdered (a
-    // global Sort over the gram dictionary would be vocabulary-sized).
-    val p = planOf("q113_boilerplate_ngrams")
-    val hashEx = p.linesIterator
+    // the point — and the top-20 cut must be TakeOrdered (a global Sort
+    // over the gram dictionary would be vocabulary-sized).
+    //
+    // Test scale: the 65 KB documents scan estimates ONE split, below
+    // local[4]'s parallelism, so Pipeline.docsSpread fires by design —
+    // Scale.spreadForFanout's docstring (Core.scala) promises a spread
+    // exactly when the scan is under-split and a no-op where it arrives
+    // pre-split. Its hashpartitioning(doc_id) REPARTITION_BY_NUM exchange
+    // moves documents ahead of the explode, never grams, and it satisfies
+    // the (ng, doc_id) distinct's clustering, so it replaces that pair
+    // exchange rather than adding one. Allowed here: at most ONE such
+    // spread, below the Generate; every other hash exchange is gram-keyed.
+    val q = "q113_boilerplate_ngrams"
+    def hashExOf(plan: String): Seq[String] = plan.linesIterator
       .filter(_.contains("Exchange hashpartitioning")).toSeq
-    assert(hashEx.nonEmpty && hashEx.forall(_.contains("ng#")),
-      s"every hash exchange must key on the gram:\n${hashEx.mkString("\n")}")
+    val plan = SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan
+    val p = plan.toString
+    val (gramEx, otherEx) = hashExOf(p).partition(_.contains("ng#"))
+    assert(gramEx.nonEmpty, s"the df count must pay a gram-keyed exchange:\n$p")
+    val spread =
+      "Exchange hashpartitioning\\(doc_id#\\d+L?, \\d+\\), REPARTITION_BY_NUM".r
+    assert(otherEx.size <= 1 && otherEx.forall(spread.findFirstIn(_).isDefined),
+      s"the only non-gram hash exchange allowed is one doc_id spread:\n" +
+        otherEx.mkString("\n"))
+    val root = plan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case other => other
+    }
+    val spreads = root.collect {
+      case e: ShuffleExchangeExec
+          if spread.findFirstIn(e.simpleString(25)).isDefined => e
+    }
+    val underGenerate = root.collect {
+      case g: GenerateExec => g.child.collect { case e: ShuffleExchangeExec => e }
+    }.flatten
+    assert(spreads.size == otherEx.size &&
+      spreads.forall(e => underGenerate.exists(_ eq e)),
+      s"the doc_id spread must sit below the explode (documents, never grams):\n$p")
     assert(p.contains("TakeOrderedAndProject"),
       "top-20 boilerplate cut must plan as a heap, not a global sort")
     assert(!p.contains("lambdafunction"),
       "gram generator must stay codegen-able (no interpreted lambdas)")
+    // Production scale carries the original pin — never a doc- or
+    // corpus-keyed shuffle: the partial (ng, doc_id) dedup pair plus the
+    // (ng) final only. maxPartitionBytes=4096 pre-splits the scan to
+    // ceil((65,515 B + 4 MiB open cost) / 4096) = 1040 >= 4 estimated
+    // splits, so the spread must be a no-op.
+    val preSplit = spark.newSession()
+    preSplit.conf.set("spark.sql.files.maxPartitionBytes", "4096")
+    val hashEx = hashExOf(
+      SparkEntry.queries(q)(preSplit, sf).queryExecution.executedPlan.toString)
+    assert(hashEx.nonEmpty && hashEx.forall(_.contains("ng#")),
+      s"every hash exchange must key on the gram:\n${hashEx.mkString("\n")}")
   }
 
   test("q117: rank window input is prefiltered by the broadcast threshold") {
